@@ -156,18 +156,9 @@ def main() -> None:
         # gr_triangles / cdc_q / sk_kmv / dd_cluster rounds) survive it and
         # accumulate across 130+ queries, and the resulting storage churn /
         # GC pauses showed up as 2-6x inflation on innocent later queries.
-        # EXEMPT the plan-memo's session-shared checkpoints (the graph edge
-        # list): dropping a materialized local checkpoint makes the memoized
-        # frame unrecoverable (truncated lineage) and would force every graph
-        # query to rebuild it — the pin is one small edge list, not churn.
         try:
-            from orc_spark.plan_memo import pinned_rdd_ids
-
-            pinned = pinned_rdd_ids(spark)
             jmap = spark.sparkContext._jsc.getPersistentRDDs()
             for rid in list(jmap.keySet().toArray()):
-                if int(rid) in pinned:
-                    continue
                 jmap.get(rid).unpersist(False)
         except Exception:  # noqa: BLE001 — bench hygiene must never fail a run
             pass
@@ -424,10 +415,10 @@ def main() -> None:
     sc1_task: dict[str, float] = {}
 
     def _stage_runtimes() -> dict:
-        # executorRunTime per (stageId, attempt) from the app status store;
-        # diffing snapshots isolates one query's task time (stages evicted
-        # by the retained-stage cap only ever REMOVE old entries, and the
-        # diff counts new stage ids only)
+        # executorRunTime per (stageId, attempt) from the app status store.
+        # The caller sums per-stage deltas over ALL stage ids of the later
+        # snapshot: new stages contribute their full runtime, pre-existing
+        # ones their increment
         jvm = spark.sparkContext._jvm
         store = spark.sparkContext._jsc.sc().statusStore()
         empty = jvm.java.util.ArrayList()

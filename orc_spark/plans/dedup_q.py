@@ -149,24 +149,14 @@ def _sig(spark: SparkSession, sf: str) -> DataFrame:
     consumer (both sides of _banded_pairs, and through it dd_minhash_pairs /
     dd_minhash_quality / dd_cluster / dd_containment's candidate set).
 
-    Memoized per (session, sf) over the immutable testdata with a
-    localCheckpoint, exactly like graph_q's _mutual_knn_edges: the shingle
-    explode + md5 + 16-min groupBy is the expensive stage of the whole
-    MinHash family, and each consumer query rebuilt it from scratch (the
-    old .cache() registered a NEW cache entry per build, so nothing was
-    ever actually shared across builds). The dd_minhash_sig QUERY itself
-    does not go through this memo — its bench timing still measures a
-    fresh signature build."""
-    from orc_spark.plan_memo import memo_subplan
-
-    def build() -> DataFrame:
-        sig16 = dd_minhash_sig(spark, sf)
-        return sig16.select(
-            "doc_id",
-            F.array(*[F.col(f"m{i}") for i in range(N_PERM)]).alias("sig"),
-        ).localCheckpoint(eager=False)
-
-    return memo_subplan(spark, sf, "minhash_sig_array", build)
+    localCheckpointed: the shingle explode + md5 + 16-min groupBy is the
+    expensive stage of the whole MinHash family, and both sides of the
+    band self-join read it."""
+    sig16 = dd_minhash_sig(spark, sf)
+    return sig16.select(
+        "doc_id",
+        F.array(*[F.col(f"m{i}") for i in range(N_PERM)]).alias("sig"),
+    ).localCheckpoint(eager=False)
 
 
 def _banded_pairs(sig: DataFrame, with_est: bool) -> DataFrame:
@@ -1332,14 +1322,7 @@ def ann_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
         ).astype(np.float64)
         return q_ids, q_m, np.sqrt((q_m * q_m).sum(axis=1))
 
-    # deterministic per (session, sf) — memo_value shares the bounded probe
-    # arrays exactly like mm_q's ANN probe set (9a1cbe5): without it every
-    # build re-ran the h60-rank window + toPandas collect as an extra job
-    from orc_spark.plan_memo import memo_value
-
-    q_ids, q_m, q_nrm = memo_value(
-        spark, sf, "ann_srp_recall_probes", _collect_probes
-    )
+    q_ids, q_m, q_nrm = _collect_probes()
     bc = spark.sparkContext.broadcast((q_ids, q_m, q_nrm))
     schema = T.StructType(
         [
@@ -1380,7 +1363,7 @@ def ann_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
     )
     # sampled mode: the probe restriction goes INTO the SRP pipeline so
     # only probe-touching candidates reach the exact-cosine rerank; the id
-    # frame is rebuilt from the memoized arrays as ONE driver slice (it is
+    # frame is rebuilt from the collected arrays as ONE driver slice (it is
     # only ever broadcast)
     probe_id_df = (
         spark.createDataFrame(

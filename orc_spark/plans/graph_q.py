@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from orc_spark.plan_memo import memo_subplan, memo_value
 from orc_spark.plans import Query
 from orc_spark.sources.tables import load_table, table_rowcount
 
@@ -36,17 +35,8 @@ PR_BASE = 15 * PR_SCALE // 100  # (1 - d) · SCALE with d = 0.85
 def _edges(spark: SparkSession, sf: str) -> DataFrame:
     """Undirected bipartite edge list: customer 2k ↔ supplier 2k+1.
 
-    Memoized per (session, sf) over the immutable testdata, CHECKPOINTED in
-    the builder: gr_pagerank's local path toPandas()-es this frame on every
-    run, and the distributed path checkpointed it per-query anyway (the
-    power iteration is the multi-consumer) — moving the checkpoint into the
-    shared builder makes repeat runs scan blocks instead of re-running the
-    orders⋈lineitem join, at the same scale cost the distributed path
-    already paid."""
-    return memo_subplan(spark, sf, "bipartite_edges", lambda: _edges_build(spark, sf))
-
-
-def _edges_build(spark: SparkSession, sf: str) -> DataFrame:
+    CHECKPOINTED here: gr_pagerank's distributed power iteration is the
+    multi-consumer, and its local path's toPandas reads the same frame."""
     orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     cs = (
@@ -126,11 +116,7 @@ def gr_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # cap gate on a conservative METADATA-ONLY bound: |edges| = 2·|distinct
     # (cust,supp)| <= 2·|lineitem|, read from the parquet FOOTER (no Spark
     # job at plan build — the stats-only count() still cost an AQE job
-    # round per build; r15). The shared builder localCheckpoints the edge
-    # list (plan_memo keeps the blocks pinned for cross-query reuse), so
-    # the toPandas below materializes THROUGH the checkpoint: first graph
-    # query per (session, sf) pays the build once, every later one reads
-    # the pinned blocks.
+    # round per build; r15).
     li_rows = table_rowcount(sf, "lineitem")
     if 2 * li_rows <= PR_LOCAL_FINISH_EDGES:
         epdf = _edges(spark, sf).toPandas()
@@ -362,37 +348,9 @@ KCORE_LOCAL_FINISH_EDGES = 1_000_000
 
 def _mutual_knn_edges(spark: SparkSession, sf: str) -> DataFrame:
     """The degree-bounded mutual top-K co-occurrence edges gr_triangles
-    builds (one definition for all six graph queries).
-
-    Memoized per (session, sf) over the immutable testdata: the build is a
-    ~0.7 s lineitem self-join + mutual filter that gr_triangles / gr_kcore /
-    gr_bfs / gr_linkpred / gr_label_prop each paid from scratch (r07 verdict
-    "What's wrong" #1). The checkpointed result is deterministic over the
-    immutable inputs, so the SAME frame (and its materialized local
-    checkpoint) is shared; plan_memo re-validates the checkpoint blocks on
-    every reuse and rebuilds if a cleaner dropped them."""
-    return memo_subplan(
-        spark, sf, "mutual_knn_edges", lambda: _mutual_knn_edges_build(spark, sf)
-    )
-
-
-def _mutual_knn_edge_count(spark: SparkSession, sf: str) -> int:
-    """|edges| of the shared mutual-kNN frame, memoized per (session, sf)
-    alongside the frame itself: four queries gate their bounded local
-    finish on this exact count, and each paid a full count() job per BUILD
-    (an extra AQE job round before the plan was even returned). The first
-    consumer per session still runs the count — which also materializes
-    the builder's pending checkpoint — and later consumers reuse the
-    scalar, exactly like the frame memo they already share."""
-    return memo_value(
-        spark,
-        sf,
-        "mutual_knn_edge_count",
-        lambda: _mutual_knn_edges(spark, sf).count(),
-    )
-
-
-def _mutual_knn_edges_build(spark: SparkSession, sf: str) -> DataFrame:
+    builds (one definition for all six graph queries), checkpointed: each
+    consumer reads it more than once (gr_triangles' three-way self-join;
+    the local-finish gate's count, then the collect)."""
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     # shuffle_hash, not broadcast: the fact side is LARGE on both sides of
     # this self-join — the session's 64 MB broadcast threshold would build
@@ -457,14 +415,8 @@ def gr_kcore(spark: SparkSession, sf: str) -> DataFrame:
     local_edges: list[tuple[int, int]] | None = None
     peels = 0
     while peels < KCORE_MAX_ROUNDS:
-        # first round reads the memoized shared count (no per-build job);
-        # later rounds count the freshly peeled frame, which also
-        # materializes that round's pending checkpoint
-        n = (
-            _mutual_knn_edge_count(spark, sf)
-            if prev_edges is None and peels == 0
-            else edges.count()
-        )
+        # counting also materializes the round's pending checkpoint
+        n = edges.count()
         if prev_edges is not None and n == prev_edges:
             converged = True
             peels -= 1  # the confirming round removed nothing
@@ -856,7 +808,7 @@ def gr_bfs(spark: SparkSession, sf: str) -> DataFrame:
     from orc_spark.functions.hashing import xor_digest
 
     edges_df = _mutual_knn_edges(spark, sf)
-    if _mutual_knn_edge_count(spark, sf) <= GRAPH_LOCAL_FINISH_EDGES:
+    if edges_df.count() <= GRAPH_LOCAL_FINISH_EDGES:
         rows = local_bfs_hops(
             [(r[0], r[1]) for r in edges_df.collect()],
             BFS_SOURCE_MOD,
@@ -980,7 +932,7 @@ def gr_label_prop(spark: SparkSession, sf: str) -> DataFrame:
     from orc_spark.functions.hashing import xor_digest
 
     edges_df = _mutual_knn_edges(spark, sf)
-    if _mutual_knn_edge_count(spark, sf) <= GRAPH_LOCAL_FINISH_EDGES:
+    if edges_df.count() <= GRAPH_LOCAL_FINISH_EDGES:
         rows = local_lpa_communities(
             [(r[0], r[1]) for r in edges_df.collect()], LP_ROUNDS
         )
@@ -1087,7 +1039,7 @@ def gr_linkpred(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB libm agree bit-for-bit, proven by the distributed path's own
     parity row)."""
     edges_df = _mutual_knn_edges(spark, sf)
-    if _mutual_knn_edge_count(spark, sf) <= GRAPH_LOCAL_FINISH_EDGES:
+    if edges_df.count() <= GRAPH_LOCAL_FINISH_EDGES:
         rows = local_linkpred(
             [(r[0], r[1]) for r in edges_df.collect()], LP_AA_SCALE, LP_TOP
         )

@@ -199,23 +199,13 @@ EMB_INDEXABLE_SQL = (
 
 
 def _ann_queries_pdf(spark: SparkSession, sf: str):
-    """The shared ANN probe set (vec_id < ANN_N_Q): four queries collected
-    the IDENTICAL 8-row frame with a scan+collect job each at plan build.
-    memo_value shares the collected pandas frame per (session, sf) over the
-    immutable testdata (first consumer still runs the job; test fixtures on
-    temp dirs always recompute). Returns a copy so no consumer can mutate
-    the shared value."""
-    from orc_spark.plan_memo import memo_value
-
-    return memo_value(
-        spark,
-        sf,
-        "ann_probe_pdf",
-        lambda: load_table(spark, sf, "embeddings")
+    """The ANN probe set (vec_id < ANN_N_Q) the four ANN queries share."""
+    return (
+        load_table(spark, sf, "embeddings")
         .where(F.col("vec_id") < ANN_N_Q)
         .select("vec_id", "embedding")
-        .toPandas(),
-    ).copy()
+        .toPandas()
+    )
 
 
 def ann_bruteforce_fast(spark: SparkSession, sf: str) -> DataFrame:
@@ -271,16 +261,9 @@ def ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     if queries.empty:  # degenerate corpus: no query set → empty recall gate
         return spark.createDataFrame([], "query_id bigint, recall_ok boolean")
     k = 5
-    # centroid training (a 20k-row sample collect + driver k-means) is
-    # deterministic over the immutable corpus — share it per (session, sf)
-    # instead of re-training on every build (build-once/query-many, the
-    # same contract ann_ivf_index's on-disk cache already states)
     from orc_spark.operators.similarity import ivf_build_centroids
-    from orc_spark.plan_memo import memo_value
 
-    cent = memo_value(
-        spark, sf, "ivf_centroids_16", lambda: ivf_build_centroids(emb, 16)
-    )
+    cent = ivf_build_centroids(emb, 16)
     ivf = ivf_topk(
         spark, emb, queries, k=k, n_centroids=16, nprobe=12, centroids=cent
     ).select("query_id", "neighbor_id")
@@ -409,22 +392,14 @@ def ann_pq(spark: SparkSession, sf: str) -> DataFrame:
     if queries.empty:  # degenerate corpus: no query set → empty recall gate
         return spark.createDataFrame([], "query_id bigint, recall_ok boolean")
     k = 5
-    # Corpus size from parquet footer metadata (memoized per sf dir) — an
-    # eager df.count() here ran a Spark job during plan CONSTRUCTION, so
-    # every build (bench, plan tests, harness build-then-collect) paid an
-    # extra AQE job round before the plan was even returned (r12 ADVICE).
+    # Corpus size from parquet footer metadata — an eager df.count() here
+    # ran a Spark job during plan CONSTRUCTION, so every build (bench, plan
+    # tests, harness build-then-collect) paid an extra AQE job round before
+    # the plan was even returned (r12 ADVICE).
     r_cand = min(4096, max(192, table_rowcount(sf, "embeddings") // 10))
-    # codebook training (20k-row sample collect + 8 subspace k-means) is
-    # deterministic over the immutable corpus — share per (session, sf)
     from orc_spark.operators.similarity import pq_train_codebooks
-    from orc_spark.plan_memo import memo_value
 
-    books = memo_value(
-        spark,
-        sf,
-        "pq_books_8_64",
-        lambda: pq_train_codebooks(emb, m=8, ksub=64),
-    )
+    books = pq_train_codebooks(emb, m=8, ksub=64)
     pq = pq_topk(
         spark, emb, queries, k=k, m=8, ksub=64, r_cand=r_cand, books=books
     ).select("query_id", "neighbor_id")

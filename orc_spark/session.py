@@ -15,8 +15,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
     """Make orc_spark importable in Python UDF workers of ANY session —
@@ -50,6 +48,19 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     setattr(spark.sparkContext, marker, True)
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at least 1g. In local mode the
+    driver JVM also runs every task, and G1 grows its heap toward the cap
+    under load — a fixed cap above physical memory gets the JVM OOM-killed
+    instead of garbage-collected."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{max(1024, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "orc_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the session. ``cpus`` defaults to $SPARK_GRAFT_CPUS or 32."""
     if cpus is None:
@@ -79,7 +90,10 @@ def get_spark(app_name: str = "orc_spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # no console progress bar: its \r frames pollute captured stdout
         # tails (the driver keeps ~2 KB of bench output) and add nothing in
@@ -91,7 +105,7 @@ def get_spark(app_name: str = "orc_spark", cpus: int | None = None) -> SparkSess
         # split small files aggressively so local[32] actually parallelizes
         # MB-scale inputs; at 100 TB raise maxPartitionBytes back to 128m+
         # (row groups bound the real split granularity there anyway)
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config(
             "spark.sql.warehouse.dir",

@@ -30,8 +30,7 @@ Reference semantics preserved exactly:
     file order, matching the reference's list-append order.
 
 Order dependence & scale: line order is the ONLY ordering (no timestamps), so
-each file gets line numbers via a per-file ``zipWithIndex`` — order within a
-single text file is preserved by Hadoop line records across partitions. The
+each file is read as one whole-text row and split into numbered lines. The
 100 TB path shards across *files* (window partitions by ``file``), never
 within one log file; a single log file is a few MB at most (the firmware
 rotates by session), so one file per window partition is cluster-safe.
@@ -42,14 +41,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("file", T.StringType(), False),
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("value", T.StringType(), True),
-    ]
-)
 
 ORCLOG_SCHEMA = T.StructType(
     [
@@ -68,49 +59,32 @@ ORCLOG_SCHEMA = T.StructType(
 )
 
 
-def read_log_lines(
-    spark: SparkSession, paths: list[str] | str, method: str = "wholetext"
-) -> DataFrame:
-    """Read log files as (file, line_no, value) preserving per-file order.
+def split_log_lines(files: DataFrame) -> DataFrame:
+    """Whole-file rows of the text source read with ``wholetext`` (batch or
+    streaming) → (file, line_no, value) in per-file line order.
 
-    Default ``wholetext``: one row per file, split into lines with
-    ``posexplode`` — a pure-JVM path (no Python row serialization), exact
-    line numbers by construction, parallel across files. Log files are MB
-    scale (firmware session rotation), so whole-file rows are bounded.
+    The one line reader of the batch and streaming paths, so both key
+    ``file`` the same way (the source's ``_metadata.file_path``) and split
+    the same way: CRLF-safe, since Hadoop's line reader would strip \\r.
+    ``posexplode`` keeps it a pure-JVM path (no Python row serialization)
+    with exact line numbers by construction."""
+    return files.select(
+        F.col("_metadata.file_path").alias("file"),
+        F.posexplode(F.split(F.col("value"), "\r?\n")).alias("line_no", "value"),
+    ).select("file", F.col("line_no").cast("long").alias("line_no"), "value")
 
-    ``zipindex`` fallback for single files too large to hold as one row:
-    Hadoop text splits preserve line order across partition indices within a
-    file, so RDD ``zipWithIndex`` is the physical line number — at the cost
-    of routing rows through Python.
-    """
+
+def read_log_lines(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+    """Read log files as (file, line_no, value) preserving per-file order:
+    one row per file, parallel across files. Log files are MB scale
+    (firmware session rotation), so whole-file rows are bounded."""
     if isinstance(paths, str):
         paths = [paths]
-    if method == "wholetext":
-        # NB: must be the wholetext= kwarg (or .format("text").load()):
-        # DataFrameReader.text() overwrites a previously .option()-set
-        # "wholetext" with its own default, silently reverting to per-line
-        # rows — which zeroes every posexplode position.
-        files = spark.read.text(paths, wholetext=True).select(
-            F.input_file_name().alias("file"), "value"
-        )
-        return files.select(
-            "file",
-            # CRLF-safe split; Hadoop's line reader would strip \r, so the
-            # explode path must too
-            F.posexplode(F.split(F.col("value"), "\r?\n")).alias("line_no", "value"),
-        ).select("file", F.col("line_no").cast("long").alias("line_no"), "value")
-    dfs = []
-    for p in paths:
-        rdd = (
-            spark.sparkContext.textFile(p)
-            .zipWithIndex()
-            .map(lambda kv, _p=p: (_p, kv[1], kv[0]))
-        )
-        dfs.append(spark.createDataFrame(rdd, LINES_SCHEMA))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    # NB: must be the wholetext= kwarg (or .format("text").load()):
+    # DataFrameReader.text() overwrites a previously .option()-set
+    # "wholetext" with its own default, silently reverting to per-line
+    # rows — which zeroes every posexplode position.
+    return split_log_lines(spark.read.text(paths, wholetext=True))
 
 
 def parse_orclog(

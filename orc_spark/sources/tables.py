@@ -29,111 +29,7 @@ TABLES = [
 BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
 
 
-# Plan-object memo for the immutable driver testdata only: a spark.read of a
-# parquet table costs ~0.1 s of driver time (file listing + footer schema),
-# and multi-table audits pay it a dozen times per plan build. DataFrames are
-# immutable lazy plans, so reuse is safe — but ONLY for paths whose contents
-# never change after creation (/root/testdata); test fixtures that write
-# fresh temp dirs always take the uncached path. Keyed on the live session
-# object so a stopped/restarted session cannot serve stale plans.
-_MEMO: dict = {}
-
-# The single source of truth for "this dir is immutable, memoize over it".
-# /root/testdata is the driver's; a fixture or scale script that writes a
-# dir ONCE and only ever reads it afterwards may append its path EXPLICITLY
-# (tests/test_empty_inputs.py's module fixtures, scripts/dense_graph_check).
-# Never add a path that can be rewritten: a cached InMemoryFileIndex (or
-# plan_memo checkpoint) over a rewritten dir serves stale data silently.
-CACHEABLE_PREFIXES: list[str] = ["/root/testdata"]
-
-
-def _cacheable(path: str) -> bool:
-    # Prefix match on path-separator boundaries only: a sibling dir sharing
-    # a registered prefix (/tmp/orc_dense2 next to /tmp/orc_dense) must NOT
-    # inherit immutability — it may be rewritten between runs.
-    p = os.path.abspath(path)
-    return any(p == c or p.startswith(c.rstrip(os.sep) + os.sep)
-               for c in CACHEABLE_PREFIXES)
-
-
-def _session_stopped(spark: SparkSession) -> bool:
-    """True once SparkContext.stop() ran (it nulls _jsc) — entries keyed on
-    a stopped session can never be served again and must not pin the
-    session object for the life of the process (multi-session pytest)."""
-    try:
-        return spark.sparkContext._jsc is None
-    except Exception:  # noqa: BLE001 — treat an unreadable session as dead
-        return True
-
-
-# Concurrent plan builds (the robustness sweeps run registry queries
-# across a thread pool) mutate the memos from several threads; iterating
-# a dict while another thread inserts raises RuntimeError. One process-wide
-# lock over memo bookkeeping (the guarded section is dict ops only — the
-# actual spark.read never runs under it).
-_MEMO_LOCK = __import__("threading").Lock()
-
-
-def evict_dead_sessions(memo: dict) -> None:
-    """Drop memo entries whose keying session has been stopped. Keys are
-    (session, ...) tuples; cheap (memo stays small: tables × sf dirs).
-    Caller must hold _MEMO_LOCK when other threads may touch the memo."""
-    dead = [k for k in memo if _session_stopped(k[0])]
-    for k in dead:
-        del memo[k]
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    cacheable = _cacheable(sf_dir)
-    key = (spark, os.path.abspath(sf_dir), name)
-    if cacheable:
-        with _MEMO_LOCK:
-            if key in _MEMO:
-                return _MEMO[key]
-    df = _load_table_uncached(spark, sf_dir, name)
-    if cacheable:
-        with _MEMO_LOCK:
-            evict_dead_sessions(_MEMO)
-            _MEMO[key] = df
-    return df
-
-
-# Corpus-size memo for plan parameters that scale with row count (e.g.
-# ann_pq's ADC candidate budget). Parquet footers carry exact row counts,
-# so this is a driver-side metadata read — NO Spark job — unlike df.count(),
-# which costs a full job round during plan CONSTRUCTION (r12 ADVICE). Same
-# staleness rules as _MEMO: cached for the immutable /root/testdata only;
-# temp-dir fixtures re-read footers every call (still ~ms). At 100 TB the
-# footer walk is one small read per file — proportional to file count, not
-# data volume, and still cheaper than a count() job over the same files.
-_COUNT_MEMO: dict[str, int] = {}
-
-
-def table_rowcount(sf_dir: str, name: str) -> int:
-    """Exact row count of a testdata table from parquet footer metadata."""
-    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    cacheable = _cacheable(path)
-    if cacheable:
-        with _MEMO_LOCK:  # match the file's locking discipline (r13 verdict)
-            if path in _COUNT_MEMO:
-                return _COUNT_MEMO[path]
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        n = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.read_metadata(os.path.join(root, f)).num_rows
-    else:
-        n = pq.read_metadata(path).num_rows
-    if cacheable:
-        with _MEMO_LOCK:
-            _COUNT_MEMO[path] = n
-    return n
-
-
-def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # The contract every downstream plan relies on: events.ts is BIGINT
         # EPOCH MICROS after load_table. The driver has shipped this column as
@@ -174,6 +70,27 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
             "extend sources/tables.py normalization for this generation"
         )
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def table_rowcount(sf_dir: str, name: str) -> int:
+    """Exact row count of a testdata table from parquet footer metadata.
+
+    A driver-side metadata read — NO Spark job — unlike df.count(), which
+    costs a full job round during plan CONSTRUCTION (r12 ADVICE); plan
+    parameters that scale with corpus size (e.g. ann_pq's ADC candidate
+    budget) read it. At 100 TB the footer walk is one small read per file —
+    proportional to file count, not data volume."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        n = 0
+        for root, _, files in os.walk(path):
+            for f in files:
+                if f.endswith(".parquet"):
+                    n += pq.read_metadata(os.path.join(root, f)).num_rows
+        return n
+    return pq.read_metadata(path).num_rows
 
 
 def _parse_size_bytes(v: str) -> int:

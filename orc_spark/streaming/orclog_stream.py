@@ -3,10 +3,10 @@
 Streaming model (SURVEY §2.A O12-O15): the log format is order-dependent
 WITHIN a file and independent ACROSS files, so the streaming unit is the
 file. `spark.readStream.text(..., wholetext=True)` delivers one row per
-newly-arrived file per micro-batch; `posexplode(split(..))` recovers exact
-line numbers declaratively (no RDD), and the batch parser's window plan runs
-unchanged inside each micro-batch. Rate limiting (the firmware's bounded
-queue, O12) maps to `maxFilesPerTrigger`.
+newly-arrived file per micro-batch; the batch reader's line splitter
+(`sources.orclog.split_log_lines`) recovers exact line numbers, and the
+batch parser's window plan runs unchanged inside each micro-batch. Rate
+limiting (the firmware's bounded queue, O12) maps to `maxFilesPerTrigger`.
 
 The sink side (O13/O14) writes byte-compatible firmware logs — "%.4f, %.4f,
 %.4f" rows framed by `Log #:` / `Actuators` / `Interval:` / header markers
@@ -21,18 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orc_spark.sources.orclog import parse_orclog
-
-
-def lines_from_wholetext(files: DataFrame) -> DataFrame:
-    """(value=whole file, path) → (file, line_no, value) with exact order."""
-    return (
-        files.select(
-            F.col("path").alias("file"),
-            F.posexplode(F.split(F.col("value"), "\n")).alias("line_no", "value"),
-        )
-        .select("file", F.col("line_no").cast("long").alias("line_no"), "value")
-    )
+from orc_spark.sources.orclog import parse_orclog, split_log_lines
 
 
 def stream_orclog_parse(
@@ -46,21 +35,19 @@ def stream_orclog_parse(
     """File-stream replay: watch ``in_dir`` for new ORCLOG files, parse each
     to the canonical table, append to ``out_dir`` (default ORC — the north-star
     format). Returns the StreamingQuery."""
-    files = (
+    lines = split_log_lines(
         spark.readStream.format("text")
         .option("wholetext", "true")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(in_dir)
-        .withColumn("path", F.col("_metadata.file_path"))
     )
 
     def handle_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        lines = lines_from_wholetext(batch_df)
-        parsed = parse_orclog(batch_df.sparkSession, lines=lines)
+        parsed = parse_orclog(batch_df.sparkSession, lines=batch_df)
         parsed.write.mode("append").format(out_format).save(out_dir)
 
     return (
-        files.writeStream.foreachBatch(handle_batch)
+        lines.writeStream.foreachBatch(handle_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

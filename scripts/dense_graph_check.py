@@ -33,7 +33,6 @@ import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from orc_spark import get_spark  # noqa: E402
-import orc_spark.plan_memo as pm  # noqa: E402
 import orc_spark.operators.graph as g  # noqa: E402
 import orc_spark.plans.graph_q as gq  # noqa: E402
 from orc_spark.plans.cluster_q import JACCARD_MIN, dd_cluster  # noqa: E402
@@ -54,14 +53,11 @@ def main() -> None:
     # Unconditional: make_dense self-skips when the expected row counts
     # already match, and REGENERATES a partially-written dir left by an
     # interrupted run (r13 ADVICE — an isdir() gate consumed such dirs
-    # as-is and opted them into the plan memo).
+    # as-is).
     from make_dense import make_dense
 
     make_dense(dense)
-    # the dense dir is immutable once generated — opt in to the subplan
-    # memo so the 240M-row edge build runs ONCE per session, not once per
-    # query per path (same contract as /root/testdata; plan_memo.py docs)
-    pm.CACHEABLE_PREFIXES.append(dense)
+    # every query (and each path of it) rebuilds the dense edge list
     spark = get_spark(
         "dense_check", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )

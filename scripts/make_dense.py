@@ -26,8 +26,7 @@ run because the data demands it:
   dense dir is only ever read by the graph/cluster queries).
 
 The dir is IMMUTABLE once generated (deterministic, seedless — pure
-offsets + a constant suffix), so plan/count memos may treat it like
-/root/testdata (scripts/dense_graph_check.py opts in explicitly).
+offsets + a constant suffix).
 
 Usage: python scripts/make_dense.py [out_dir]   (default /tmp/orc_dense)
 Skips generation when out_dir already holds the expected row counts.

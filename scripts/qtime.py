@@ -41,13 +41,8 @@ def main() -> None:
 
     def _drop_persisted() -> None:
         try:
-            from orc_spark.plan_memo import pinned_rdd_ids
-
-            pinned = pinned_rdd_ids(spark)
             jmap = spark.sparkContext._jsc.getPersistentRDDs()
             for rid in list(jmap.keySet().toArray()):
-                if int(rid) in pinned:
-                    continue
                 jmap.get(rid).unpersist(False)
         except Exception:  # noqa: BLE001
             pass

@@ -38,7 +38,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #   test_empty_inputs  — robustness only (runs to 0+ rows, no values)
 #   test_plan_quality  — pins plan SHAPES (exchange/scan counts), which is
 #                        scale evidence, not value evidence
-#   test_plan_memo     — memo/cache mechanics, not query values
 #   test_gate_rotation / test_no_reference_copy / test_tables_schema —
 #                        process/CI pins, not query evidence
 _NOT_EVIDENCE = {
@@ -46,7 +45,6 @@ _NOT_EVIDENCE = {
     "test_recursive_oracles.py",
     "test_empty_inputs.py",
     "test_plan_quality.py",
-    "test_plan_memo.py",
     "test_gate_rotation.py",
     "test_no_reference_copy.py",
     "test_tables_schema.py",

@@ -57,22 +57,6 @@ def _sweep(spark, sf_dir: str) -> dict[str, str]:
     return fails
 
 
-
-
-def _register_immutable(d: str):
-    """Opt a write-once fixture dir into load_table's plan memo for the
-    rest of the session (tables.CACHEABLE_PREFIXES contract): the sweeps
-    below build all 162 query plans against the dir, and the uncached path
-    re-lists + re-reads parquet footers on EVERY load_table call (~0.1 s
-    x several hundred calls per sweep — measured ~40% of sweep wall time).
-    The dir is never rewritten after the fixture returns, so the memo's
-    immutability contract holds."""
-    from orc_spark.sources.tables import CACHEABLE_PREFIXES
-
-    CACHEABLE_PREFIXES.append(d)
-    return d
-
-
 @pytest.fixture(scope="module")
 def empty_sf(spark, sf_small, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("empty_sf"))
@@ -81,7 +65,7 @@ def empty_sf(spark, sf_small, tmp_path_factory):
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -98,7 +82,7 @@ def onerow_sf(spark, sf_small, tmp_path_factory):
         df.limit(1).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -151,7 +135,7 @@ def constant_sf(spark, sf_small, tmp_path_factory):
         df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -209,7 +193,7 @@ def nullheavy_sf(spark, sf_small, tmp_path_factory):
         df.select(cols).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -272,7 +256,7 @@ def skew_sf(spark, sf_small, tmp_path_factory):
         df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -314,7 +298,7 @@ def degentext_sf(spark, sf_small, tmp_path_factory):
         df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -349,7 +333,7 @@ def replay_instant_sf(spark, sf_small, tmp_path_factory):
         df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep

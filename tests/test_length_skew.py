@@ -76,8 +76,6 @@ def _copy_tables(d: str, sf_small: str, skip=("documents",)) -> None:
 
 @pytest.fixture(scope="module")
 def lenskew_sf(spark, sf_small, tmp_path_factory):
-    from tests.test_empty_inputs import _register_immutable
-
     d = str(tmp_path_factory.mktemp("lenskew_sf"))
     _copy_tables(d, sf_small)
     giant = " ".join(f"word{i % 997:03d}" for i in range(GIANT_WORDS))
@@ -89,7 +87,7 @@ def lenskew_sf(spark, sf_small, tmp_path_factory):
     small.unionByName(giant_row).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(d, "documents.parquet")
     )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep
@@ -100,8 +98,6 @@ def test_every_doc_query_survives_one_giant_document(spark, lenskew_sf):
 
 @pytest.fixture(scope="module")
 def onechar_sf(spark, sf_small, tmp_path_factory):
-    from tests.test_empty_inputs import _register_immutable
-
     d = str(tmp_path_factory.mktemp("onechar_sf"))
     _copy_tables(d, sf_small)
     docs = spark.read.parquet(os.path.join(sf_small, "documents.parquet"))
@@ -110,7 +106,7 @@ def onechar_sf(spark, sf_small, tmp_path_factory):
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(d, "documents.parquet")
     )
-    return _register_immutable(d)
+    return d
 
 
 @pytest.mark.sweep

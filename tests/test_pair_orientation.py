@@ -17,7 +17,7 @@ orders are constructed, not drawn.
 
 Covers: dd_ngram_jaccard, dd_minhash_pairs, dd_simhash_pairs, dd_embcos,
 dd_semdedup (survivor audit), ann_srp_pairs, and the shared graph edge
-builder `_mutual_knn_edges_build`. Orientation mechanisms audited in
+builder `_mutual_knn_edges`. Orientation mechanisms audited in
 COVERAGE.md §pair-orientation.
 """
 
@@ -229,9 +229,7 @@ def test_dd_semdedup_order_independence(spark, emb_dirs):
 
 def test_mutual_knn_edges_orientation(spark, li_dirs):
     """The shared graph edge builder: canonical (least, greatest) edges,
-    identical under input order. Uses the _build entry (the memo keys on
-    sf path so each layout builds fresh anyway; _build keeps this
-    independent of memo state)."""
-    from orc_spark.plans.graph_q import _mutual_knn_edges_build
+    identical under input order."""
+    from orc_spark.plans.graph_q import _mutual_knn_edges
 
-    _check(spark, li_dirs, _mutual_knn_edges_build, "ea", "eb")
+    _check(spark, li_dirs, _mutual_knn_edges, "ea", "eb")

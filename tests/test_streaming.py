@@ -13,11 +13,7 @@ from pyspark.sql import functions as F
 from orc_spark.operators.control import Z_XL_GAINS, pid_params, pid_scan
 from orc_spark.sources.orclog import parse_orclog
 from orc_spark.sources.tables import load_table
-from orc_spark.streaming.orclog_stream import (
-    lines_from_wholetext,
-    stream_orclog_parse,
-    write_orclog_format,
-)
+from orc_spark.streaming.orclog_stream import stream_orclog_parse, write_orclog_format
 from orc_spark.streaming.windows import pid_streaming, stream_event_windows
 
 
@@ -32,8 +28,8 @@ def tmpdirs(tmp_path):
     return d
 
 
-def _make_log(path, runs=(3, 2), enabled=True, interval=0.01):
-    with open(path, "w") as fh:
+def _make_log(path, runs=(3, 2), enabled=True, interval=0.01, newline=None):
+    with open(path, "w", newline=newline) as fh:
         fh.write("Log #: 7\n")
         fh.write(f"Actuators {'enabled' if enabled else 'disabled'}\n")
         fh.write(f"Interval:{interval:f}\n")
@@ -49,7 +45,9 @@ def _make_log(path, runs=(3, 2), enabled=True, interval=0.01):
 
 def test_stream_orclog_parse(spark, tmpdirs):
     _make_log(os.path.join(tmpdirs["in"], "log1.csv"))
-    _make_log(os.path.join(tmpdirs["in"], "log2.csv"), runs=(4,), enabled=False)
+    _make_log(
+        os.path.join(tmpdirs["in"], "log2.csv"), runs=(4,), enabled=False, newline="\r\n"
+    )
     q = stream_orclog_parse(spark, tmpdirs["in"], tmpdirs["chk"], tmpdirs["out"], "orc")
     q.awaitTermination(120)
     out = spark.read.orc(tmpdirs["out"])
@@ -63,7 +61,13 @@ def test_stream_orclog_parse(spark, tmpdirs):
     _make_log(os.path.join(tmpdirs["in"], "log3.csv"), runs=(5,))
     q2 = stream_orclog_parse(spark, tmpdirs["in"], tmpdirs["chk"], tmpdirs["out"], "orc")
     q2.awaitTermination(120)
-    assert spark.read.orc(tmpdirs["out"]).count() == 9 + 5
+    out = spark.read.orc(tmpdirs["out"])
+    assert out.count() == 9 + 5
+    # the streamed table IS the batch parse of the same files, `file` keys
+    # and the CRLF log's split included
+    key = ["file", "line_no"]
+    batch = parse_orclog(spark, tmpdirs["in"])
+    assert out.select(batch.columns).orderBy(key).collect() == batch.orderBy(key).collect()
 
 
 def test_orclog_roundtrip(spark, tmp_path):
